@@ -20,15 +20,7 @@ final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallel
   case object Canceled extends Status
   final case class Failed(err: String) extends Status
 
-  // re-creatable: a server stop() shuts the pool down with it, and a
-  // restarted server (same searcher instance, e.g. across test
-  // lifecycles) must be able to accept new submissions
-  @volatile private var poolRef: java.util.concurrent.ExecutorService = _
-  private def pool: java.util.concurrent.ExecutorService = synchronized {
-    if (poolRef == null || poolRef.isShutdown)
-      poolRef = Executors.newFixedThreadPool(parallelism)
-    poolRef
-  }
+  private val pool = new AsyncPool(parallelism)
   private val jobs = new ConcurrentHashMap[String, JFuture[_]]()
 
   private def statusPath(id: String) = Paths.get(s"$resultsDir/$id.status")
@@ -39,19 +31,17 @@ final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallel
   def start(id: String, query: => DataFrame): Unit = {
     Files.createDirectories(Paths.get(resultsDir))
     Files.writeString(statusPath(id), "RUNNING")
-    val task = pool.submit(new Runnable {
-      override def run(): Unit = {
-        spark.sparkContext.setJobGroup(s"async-$id", s"async search $id", interruptOnCancel = true)
-        try {
-          query.write.mode("overwrite").parquet(dataPath(id))
-          Files.writeString(statusPath(id), "DONE")
-        } catch {
-          case e: Throwable =>
-            if (Files.readString(statusPath(id)) != "CANCELED")
-              Files.writeString(statusPath(id), s"FAILED:${e.getMessage}")
-        } finally spark.sparkContext.clearJobGroup()
-      }
-    })
+    val task = pool.submit(s"async-$id") {
+      spark.sparkContext.setJobGroup(s"async-$id", s"async search $id", interruptOnCancel = true)
+      try {
+        query.write.mode("overwrite").parquet(dataPath(id))
+        Files.writeString(statusPath(id), "DONE")
+      } catch {
+        case e: Throwable =>
+          if (Files.readString(statusPath(id)) != "CANCELED")
+            Files.writeString(statusPath(id), s"FAILED:${e.getMessage}")
+      } finally spark.sparkContext.clearJobGroup()
+    }
     jobs.put(id, task)
   }
 
@@ -89,9 +79,7 @@ final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallel
     status(id)
   }
 
-  def shutdown(): Unit = synchronized {
-    if (poolRef != null) { poolRef.shutdownNow(); () }
-  }
+  def shutdown(): Unit = pool.shutdown(spark)
 }
 
 /** Chunked async search: the reference persists per-fraction partial
@@ -105,13 +93,7 @@ final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallel
   */
 final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
 
-  // re-creatable across server stop/start — see AsyncSearcher.pool
-  @volatile private var poolRef: java.util.concurrent.ExecutorService = _
-  private def pool: java.util.concurrent.ExecutorService = synchronized {
-    if (poolRef == null || poolRef.isShutdown)
-      poolRef = Executors.newFixedThreadPool(2)
-    poolRef
-  }
+  private val pool = new AsyncPool(2)
 
   private def idDir(id: String) = s"$resultsDir/$id"
   private def chunkDir(id: String, startMs: Long) = s"${idDir(id)}/chunk=$startMs"
@@ -125,7 +107,9 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
   /** Run (or resume) search `id`: skips chunks whose done-marker
     * exists, processes the rest newest-first, stops between chunks
     * when [[cancel]] has marked the id (already-persisted partials
-    * stay fetchable, matching CancelAsyncSearch semantics). Blocking
+    * stay fetchable, matching CancelAsyncSearch semantics) or
+    * [[shutdown]] is stopping the pool it runs in (a restart resumes
+    * it; a call made outside the pool never sees a stop). Blocking
     * variant — submit via [[startAsync]] for fire-and-forget. */
   def run(id: String, engine: SeqEngine, query: String,
       fromMs: Long, toMs: Long, chunkMs: Long = 86400000L): Unit = {
@@ -137,7 +121,7 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
       val todo = chunkStarts(fromMs, toMs, chunkMs).reverse
         .filterNot(s => Files.exists(marker(id, s)))
       todo.foreach { start =>
-        if (!isCanceled(id)) {
+        if (!isCanceled(id) && !pool.stopping) {
           val lo = math.max(start, fromMs)
           val hi = math.min(start + chunkMs - 1, toMs)
           engine.matches(query, lo, hi)
@@ -145,12 +129,13 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
           Files.writeString(marker(id, start), "done")
         }
       }
-      if (!isCanceled(id))
+      if (!isCanceled(id) && !pool.stopping)
         Files.writeString(Paths.get(s"${idDir(id)}/.complete"), "done")
     } catch {
       // a canceled job group surfaces as SparkException in-flight —
-      // swallow it only for canceled ids, the partials are still valid
-      case _: Throwable if isCanceled(id) => ()
+      // swallow it only for canceled ids or a stopping searcher, the
+      // partials are still valid
+      case _: Throwable if isCanceled(id) || pool.stopping => ()
     } finally spark.sparkContext.clearJobGroup()
   }
 
@@ -195,10 +180,7 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     AsyncSearchFiles.writeAtomic(Paths.get(s"${idDir(id)}/.request"),
       s"$fromMs\u0000$toMs\u0000$chunkMs\u0000$query"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    pool.submit(new Runnable {
-      override def run(): Unit =
-        ChunkedAsyncSearcher.this.run(id, engine, query, fromMs, toMs, chunkMs)
-    })
+    pool.submit(s"async-$id")(run(id, engine, query, fromMs, toMs, chunkMs))
     ()
   }
 
@@ -253,8 +235,69 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     else dir.listFiles().count(_.getName.startsWith(".done_"))
   }
 
-  def shutdown(): Unit = synchronized {
-    if (poolRef != null) { poolRef.shutdownNow(); () }
+  def shutdown(): Unit = pool.shutdown(spark)
+}
+
+/** The worker pool of an async searcher. Re-creatable: a server stop()
+  * shuts it down, and a restarted server (same searcher instance, e.g.
+  * across test lifecycles) must be able to accept new submissions. */
+private[engine] final class AsyncPool(threads: Int) {
+  /** One pool, from the submission that created it to its shutdown. */
+  private final class Life {
+    val exec: java.util.concurrent.ExecutorService = Executors.newFixedThreadPool(threads)
+    @volatile var stopping = false
+  }
+  private val ShutdownWaitMs = 30000L
+  @volatile private var life: Life = _
+  // the pool a worker thread belongs to, while it runs a search
+  private val worker = new ThreadLocal[Life]
+  // job groups of the submitted searches running now
+  private val active = ConcurrentHashMap.newKeySet[String]()
+
+  /** True inside a worker whose pool [[shutdown]] is stopping: a
+    * running search stops before its next job. Always false outside
+    * the pool's workers, so a blocking caller is never cut short. */
+  def stopping: Boolean = {
+    val l = worker.get()
+    l != null && l.stopping
+  }
+
+  /** Runs `body`, a search whose Spark jobs run in job group `group`. */
+  def submit(group: String)(body: => Unit): JFuture[_] = synchronized {
+    if (life == null || life.exec.isShutdown) life = new Life
+    val l = life
+    l.exec.submit(new Runnable {
+      // a search still queued when shutdown began never starts
+      override def run(): Unit = if (!l.stopping) {
+        worker.set(l)
+        active.add(group)
+        try body finally { active.remove(group); worker.remove() }
+      }
+    })
+  }
+
+  /** Stops the pool and waits, up to 30 s, for its workers to end.
+    * Workers are not interrupted: one interrupted inside a Spark job
+    * stops waiting for it, but the job — a chunk write — runs on after
+    * the server stopped and races a restarted server's resume of the
+    * same chunk (whose output commit is then denied). Instead the
+    * running searches' job groups are canceled until the pool is empty
+    * — again each round, for a worker that launched its next job just
+    * before it saw [[stopping]]. */
+  def shutdown(spark: SparkSession): Unit = synchronized {
+    val l = life
+    if (l != null) {
+      l.stopping = true
+      l.exec.shutdown()
+      val deadline = System.currentTimeMillis() + ShutdownWaitMs
+      var ended = false
+      while (!ended && System.currentTimeMillis() < deadline) {
+        active.forEach(g => spark.sparkContext.cancelJobGroup(g))
+        ended = l.exec.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+      }
+      if (!ended) l.exec.shutdownNow()
+      ()
+    }
   }
 }
 

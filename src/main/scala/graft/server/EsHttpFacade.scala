@@ -8,6 +8,7 @@ import java.util.zip.GZIPInputStream
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.{AggFunc, AggRequest, ChunkedAsyncSearcher, DocsTable, SearchRequest, SeqEngine}
 import graft.ingest.BulkIngest
@@ -38,10 +39,9 @@ import graft.model.SeqMapping
   *   table + engine are built once per sink generation (not per
   *   request), compiled request plans are memoized so a repeated query
   *   re-executes a ready physical plan instead of re-parsing /
-  *   re-analyzing, and the table is pinned in executor memory. Sink
-  *   appends are picked up via a directory signature re-checked at
-  *   most once per second — bounded staleness matching the near-real-
-  *   time visibility contract ingestion already has.
+  *   re-analyzing, and the table is pinned in executor memory. A
+  *   `/_bulk` to this facade is visible to the next read; other
+  *   writers of the sink within 1 s (see [[ServingCore]]).
   */
 /** Request admission limits (docs/en/08-rate-limiting.md,
   * network/ratelimiter.go, storeapi/grpc_search.go:71-77 analogue):
@@ -113,6 +113,8 @@ final class EsHttpFacade(
   }
 
   private val bulkLock = new Object
+  /** Docs per output file of one `/_bulk` append. */
+  private val BulkFileDocs = 10000
 
   def stop(): Unit = {
     if (server != null) server.stop(0)
@@ -120,6 +122,24 @@ final class EsHttpFacade(
     // worker threads keep running Spark jobs into JVM shutdown
     // (already-persisted partials stay fetchable after a restart)
     if (asyncStarted) asyncSearcher.shutdown()
+  }
+
+  /** Appends projected docs in the sink's own layout and returns the
+    * schema written. A day-partitioned sink (`date=` dirs, as
+    * [[BulkIngest.ingestPartitioned]] writes it) gets `date=` files
+    * too: flat root files beside `date=` dirs are invisible to every
+    * reader. An empty or flat sink stays flat. */
+  private def appendToSink(docs: org.apache.spark.sql.DataFrame): StructType = {
+    val p = new org.apache.hadoop.fs.Path(sinkDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dayPartitioned = fs.exists(p) &&
+      fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+    val out =
+      if (dayPartitioned) docs.withColumn("date", to_date(timestamp_millis(col("mid"))))
+      else docs
+    val w = out.write.mode("append")
+    if (dayPartitioned) w.partitionBy("date").parquet(sinkDir) else w.parquet(sinkDir)
+    out.schema
   }
 
   /** Docs table over everything ingested so far. */
@@ -135,7 +155,7 @@ final class EsHttpFacade(
     * via [[core]] so proto clients of the same sink get the identical
     * warm path. */
   private lazy val servingCore =
-    new ServingCore(spark, mapping, sinkDir, mappingPath)
+    new ServingCore(spark, mapping, sinkDir, mappingPath, metrics)
 
   /** The serving core, for co-hosting a gRPC API on the same pinned
     * table and plan cache (only meaningful with serving=true). */
@@ -348,7 +368,6 @@ final class EsHttpFacade(
       import spark.implicits._
       val t0 = System.nanoTime()
       val lines = body(ex).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      val df = lines.toDF("value")
       // ES contract: one items entry per bulk action (= per document
       // line). Counted from the request itself, NOT from the surviving
       // ingested rows, so a doc line the projection drops still gets
@@ -356,10 +375,17 @@ final class EsHttpFacade(
       // sent.
       val actionRe = """^\s*\{\s*"(index|create|update|delete)"\s*:""".r
       val nActions = lines.count(l => actionRe.findFirstIn(l).isEmpty)
+      // one task — and so one output file — per BulkFileDocs docs, not
+      // one per core: every later listing, cache refresh and re-read of
+      // the sink touches that many fewer files
+      val nFiles = math.max(1, math.ceil(nActions.toDouble / BulkFileDocs).toInt)
+      val df = spark.sparkContext.parallelize(lines, nFiles).toDF("value")
       try bulkBreaker.run {
         bulkLock.synchronized {
-          BulkIngest.project(df, currentMapping, requestTimeMs = System.currentTimeMillis())
-            .write.mode("append").parquet(sinkDir)
+          val docs = BulkIngest.project(df, currentMapping,
+            requestTimeMs = System.currentTimeMillis())
+          if (serving) servingCore.publishAppend(appendToSink(docs))
+          else { appendToSink(docs); () }
         }
       } catch {
         case _: bulkBreaker.CircuitOpenException =>

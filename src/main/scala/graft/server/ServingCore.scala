@@ -1,6 +1,8 @@
 package graft.server
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.engine.{DocsTable, SearchRequest, SeqEngine}
 import graft.model.SeqMapping
@@ -9,13 +11,36 @@ import graft.model.SeqMapping
   * a generation-cached engine over a memory-pinned docs table, memoized
   * request plans, a response cache, and the incremental top-page scan.
   *
-  * Sink appends are picked up via a directory signature re-checked at
-  * most once per second — bounded staleness matching the near-real-time
-  * visibility contract ingestion already has (the reference's sealed-
-  * fraction refresh analogue). When `mappingPath` is set, the mapping
-  * FILE's signature rides the same probe: editing the mapping swaps a
-  * reloaded engine in live, within the same 1 s staleness bound — the
-  * reference's timer-based hot reload
+  * Visibility contract: an in-process append (the facade's `/_bulk`,
+  * run through [[publishAppend]]) is visible to the very next read;
+  * any other writer of the sink is visible within 1 s.
+  *
+  *   - In-process appends cost no re-pin of their own. Spark's writer
+  *     ends every file-source insert with
+  *     `CacheManager.recacheByPath(sinkDir)`, which refreshes the pinned
+  *     table's file index in place, so the pinned frame already covers
+  *     the new files. [[publishAppend]] only moves the generation: it
+  *     drops the memoized plans and cached responses (a memoized plan
+  *     holds the old in-memory relation's physical plan and would
+  *     replay the old files) and re-lists the day partitions.
+  *   - Everything else — another writer, a mapping edit, the first
+  *     build, an in-process append that brings a column the pinned
+  *     table lacks or grows a memory pin past `maxPinnedBytes` — is
+  *     picked up by a directory signature re-checked at most once per
+  *     second (the very next read, for such an append), and rebuilds
+  *     the table in full: a fresh mergeSchema read, then a new pin.
+  *     Each full rebuild logs one line with its cause (`first_build`,
+  *     `external_change`, `mapping_edit`, `new_columns`, `pin_cap`)
+  *     and counts in `serving_full_rebuilds_total`;
+  *     in-process publishes count in `serving_inprocess_publishes_total`.
+  *   - Remaining window: an external write that lands DURING our own
+  *     write is re-cached by Spark with it, but a column only its files
+  *     carry waits for the next full rebuild (the pinned schema is the
+  *     one the last rebuild merged).
+  *
+  * When `mappingPath` is set, the mapping FILE's signature rides the
+  * same probe: editing the mapping swaps a reloaded engine in live,
+  * within the same 1 s bound — the reference's timer-based hot reload
   * (mappingprovider/mapping_provider.go:96-110) without a background
   * thread. A mapping file that fails to parse keeps the last good
   * mapping (and keeps probing), matching the reference's
@@ -27,13 +52,23 @@ final class ServingCore(
     spark: org.apache.spark.sql.SparkSession,
     mapping: SeqMapping,
     sinkDir: String,
-    mappingPath: Option[String] = None) {
+    mappingPath: Option[String] = None,
+    metrics: Metrics = new Metrics("seq_db")) {
 
-  // (sinkSignature, engine, date partitions newest-first) — rebuilt
+  private val mFullRebuilds = metrics.counter("serving_full_rebuilds_total",
+    "serving-state rebuilds that re-read and re-pinned the sink")
+  private val mPublishes = metrics.counter("serving_inprocess_publishes_total",
+    "in-process appends published without a rebuild")
+
+  // (sinkSignature, engine, date partitions newest-first) — replaced
   // when the sink generation moves
   @volatile private var engineCache: (Long, SeqEngine, Seq[String]) = null
-  @volatile private var lastSigCheckMs = 0L
-  @volatile private var lastSig = 0L
+  // (wall ms the probe ran, signature it saw), swapped as one value
+  @volatile private var lastProbe: (Long, Long) = (0L, 0L)
+  private val probeLock = new Object
+  // why the last in-process append was not published, reported by the
+  // full rebuild it leaves to the next read
+  @volatile private var rebuildCause: String = null
   // Every cache below keys by (generation, request-shape): an entry
   // computed against generation G that loses the race with a rebuild to
   // G+1 is inserted under G and simply never read again — clear() on
@@ -59,14 +94,25 @@ final class ServingCore(
   // same envelope the old 1000x256 config had
   private val PrefixRows = 5120
 
-  /** Cheap generation probe: top-level sink FS statuses (file/partition
-    * adds bump dir mtimes) folded with the mapping file's (len, mtime)
-    * when hot-reload is wired — re-checked at most once per second. */
+  private def sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
+  private def sinkFs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Cheap generation probe: the last [[probeSignature]] result while
+    * it is under a second old, a fresh probe otherwise. */
   private def sinkSignature(): Long = {
+    val last = lastProbe
+    if (System.currentTimeMillis() - last._1 < 1000 && engineCache != null) last._2
+    else probeSignature()
+  }
+
+  /** Top-level sink FS statuses (file/partition adds bump dir mtimes)
+    * folded with the mapping file's (len, mtime) when hot-reload is
+    * wired. Probes run one at a time, so the recorded result is always
+    * the latest listing. */
+  private def probeSignature(): Long = probeLock.synchronized {
     val now = System.currentTimeMillis()
-    if (now - lastSigCheckMs < 1000 && engineCache != null) return lastSig
-    val p = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = sinkPath
+    val fs = sinkFs
     val sinkSig =
       if (!fs.exists(p)) 0L
       else fs.listStatus(p).foldLeft(17L)((a, s) =>
@@ -77,8 +123,7 @@ final class ServingCore(
       if (!f.exists()) 0L else f.length() * 1000003L + f.lastModified()
     }
     val sig = sinkSig * 31L + mapSig
-    lastSigCheckMs = now
-    lastSig = sig
+    lastProbe = (now, sig)
     sig
   }
 
@@ -110,30 +155,101 @@ final class ServingCore(
     * never cached after a concurrent rebuild moved to G+1. */
   def generation(): Long = state()._1
 
+  /** Runs `write`, an in-process append to the sink that returns the
+    * schema of the rows it wrote, and publishes it: when nothing else
+    * moved the sink since the current generation (the pre-write
+    * signature equals it and the mapping is unchanged), the pinned
+    * table — which Spark's `recacheByPath` refreshed during the write —
+    * stays, and only the generation moves. Otherwise the next read
+    * rebuilds in full, exactly as for an external writer. Two more
+    * cases take the full rebuild too:
+    *   - the write carries a column or nested field the pinned table
+    *     lacks (one the mapping gained since the last rebuild): the
+    *     refreshed table
+    *     keeps the schema the last mergeSchema read fixed, so only a
+    *     fresh read makes the column searchable;
+    *   - the table is pinned in memory and the sink has now outgrown
+    *     `maxPinnedBytes`: the rebuild re-chooses the pin level.
+    *
+    * Holds the core's lock across the write: a reader whose probe lands
+    * mid-write (a half-committed listing) then waits for the publish
+    * instead of starting a full rebuild of its own. Readers whose
+    * signature still matches never take the lock. */
+  def publishAppend(write: => StructType): Unit = synchronized {
+    val before = probeSignature()
+    // a failed write leaves the probe on whatever it left behind: the
+    // next read then rebuilds if the listing moved
+    val written = try write catch { case e: Throwable => probeSignature(); throw e }
+    val after = probeSignature()
+    val cur = engineCache
+    if (cur != null && cur._1 == before && currentMapping == cur._2.table.mapping) {
+      val df = cur._2.table.df
+      val pinned = ServingCore.fieldPaths(df.schema).toSet
+      if (!ServingCore.fieldPaths(written).forall(pinned)) rebuildCause = "new_columns"
+      else if (df.storageLevel == StorageLevel.MEMORY_AND_DISK && sinkBytes() > maxPinnedBytes)
+        rebuildCause = "pin_cap"
+      else {
+        clearCaches()
+        engineCache = (after, cur._2, listDates())
+        mPublishes.inc()
+      }
+    }
+  }
+
+  /** On-disk bytes above which the pin degrades to DISK_ONLY. */
+  private def maxPinnedBytes: Long = spark.conf
+    .get("spark.graft.serving.maxPinnedBytes", (8L << 30).toString).toLong
+
+  private def sinkBytes(): Long = {
+    val p = sinkPath
+    val fs = sinkFs
+    if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
+  }
+
+  private def clearCaches(): Unit = {
+    planCache.clear()
+    responseCache.clear()
+    prefixCache.clear()
+    objCache.clear()
+  }
+
+  /** Day partitions newest-first, straight from the FS listing (no
+    * Spark job) — drives the incremental page scan below. */
+  private def listDates(): Seq[String] = {
+    val p = sinkPath
+    val fs = sinkFs
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).map(_.getPath.getName)
+      .filter(_.startsWith("date=")).map(_.stripPrefix("date="))
+      .sorted.reverse.toSeq
+  }
+
   private def state(): (Long, SeqEngine, Seq[String]) = {
-    val sig = sinkSignature()
     val cached = engineCache
-    if (cached != null && cached._1 == sig) return cached
+    if (cached != null && cached._1 == sinkSignature()) return cached
     synchronized {
+      // re-probe under the lock: an append published while this thread
+      // waited has already moved the generation and recorded its probe
+      val sig = sinkSignature()
       val again = engineCache
       if (again != null && again._1 == sig) return again
+      // mapping hot-reload: re-read the file on every generation move
+      // (mapping edits move the signature; sink appends re-read an
+      // unchanged file — cheap, it's a KB-scale YAML). Parse failures
+      // keep the last good mapping rather than taking serving down.
+      val liveMapping = currentMapping
+      val cause =
+        if (again == null) "first_build"
+        else if (liveMapping != again._2.table.mapping) "mapping_edit"
+        else if (rebuildCause != null) rebuildCause
+        else "external_change"
       // blocking: a mapping-only reload rebuilds an IDENTICAL sink
       // plan, and an in-flight async unpersist of the old entry could
       // land after the new persist and evict it by plan equality —
       // leaving serving silently uncached. Rebuilds are ≤1/s and off
       // the request path, so the synchronous drop costs nothing.
       if (again != null) again._2.table.df.unpersist(blocking = true)
-      planCache.clear()
-      responseCache.clear()
-      prefixCache.clear()
-      objCache.clear()
-      // mapping hot-reload: re-read the file on every generation move
-      // (mapping edits move the signature; sink appends re-read an
-      // unchanged file — cheap, it's a KB-scale YAML). Parse failures
-      // keep the last good mapping rather than taking serving down.
-      val liveMapping = currentMapping
-      val p = new org.apache.hadoop.fs.Path(sinkDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      clearCaches()
       // few fat in-memory partitions, clustered by date: a point query
       // launches `servingPartitions` tasks (scheduling is the latency
       // floor, not the scan) and the date-window filter skips whole
@@ -155,29 +271,27 @@ final class ServingCore(
       // on-disk parquet (compressed — the in-memory columnar form is
       // larger still) degrade to DISK_ONLY: still one materialized,
       // date-clustered copy with batch-stat skipping, but the unified
-      // memory region stays free for query execution.
-      val maxPinned = spark.conf
-        .get("spark.graft.serving.maxPinnedBytes", (8L << 30).toString).toLong
-      val sinkBytes =
-        if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
+      // memory region stays free for query execution. An in-process
+      // publish that grows a memory-pinned sink past the cap falls back
+      // to a full rebuild, so the level is re-chosen here.
       val level =
-        if (sinkBytes > maxPinned) org.apache.spark.storage.StorageLevel.DISK_ONLY
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+        if (sinkBytes() > maxPinnedBytes) StorageLevel.DISK_ONLY
+        else StorageLevel.MEMORY_AND_DISK
       val df = (if (raw.columns.contains("date"))
           raw.repartition(servingPartitions, col("date"))
             .sortWithinPartitions("date", "mid")
         else raw.coalesce(servingPartitions))
         .persist(level)
       val eng = new SeqEngine(DocsTable(df, liveMapping))
-      // day partitions newest-first, straight from the FS listing (no
-      // Spark job) — drives the incremental page scan below
-      val dates =
-        if (!fs.exists(p)) Nil
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(_.startsWith("date=")).map(_.stripPrefix("date="))
-          .sorted.reverse.toSeq
-      val state0 = (sig, eng, dates)
+      val state0 = (sig, eng, listDates())
       engineCache = state0
+      rebuildCause = null
+      // counted once the read succeeded: a readiness probe against a
+      // sink that does not exist yet is not a rebuild
+      mFullRebuilds.inc()
+      System.err.println(
+        s"""{"level":"info","msg":"serving full rebuild","cause":"$cause",""" +
+          s""""sink":${graft.model.Json.quote(sinkDir)},"generation":$sig}""")
       state0
     }
   }
@@ -291,4 +405,16 @@ final class ServingCore(
     }
     Array.empty
   }
+}
+
+object ServingCore {
+  /** Dotted paths of every field of `t`, nested struct fields included. */
+  private def fieldPaths(t: StructType, prefix: String = ""): Seq[String] =
+    t.fields.toSeq.flatMap { f =>
+      val path = prefix + f.name
+      path +: (f.dataType match {
+        case s: StructType => fieldPaths(s, path + ".")
+        case _ => Nil
+      })
+    }
 }

@@ -46,8 +46,12 @@ object StreamingGate {
       if (shm.isDirectory && shm.canWrite) "/dev/shm" else graft.GraftTmp.dir
     }
 
+  /** Working dir of gate row `tag` over `sfDir`: `in`, `out`, `ckpt`. */
+  private[tables] def scratchDir(tag: String, sfDir: String): String =
+    s"$scratch/graft_sgate_${tag}_${new java.io.File(sfDir).getName}"
+
   private def freshDir(spark: SparkSession, tag: String, sfDir: String): String = {
-    val d = s"$scratch/graft_sgate_${tag}_${new java.io.File(sfDir).getName}"
+    val d = scratchDir(tag, sfDir)
     val p = new org.apache.hadoop.fs.Path(d)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     d
@@ -284,6 +288,40 @@ object StreamingGate {
         .orderBy(col("doc_id"))
     }
 
+  private val DayMs = 86400000L
+
+  /** Max `mid` of a gate corpus, collected ONCE (one scan) so each
+    * sentinel is a literal rather than a re-executed corpus agg; None
+    * on an empty corpus, which has no state to flush and so gets no
+    * sentinel slice (a max defaulted to 0 would stream sentinel rows
+    * into the sink). */
+  private[tables] def corpusMaxMid(base: DataFrame): Option[Long] = {
+    val row = base.agg(max(col("mid"))).head()
+    if (row.isNullAt(0)) None else Some(row.getLong(0))
+  }
+
+  /** The sessionize gate's flush: one event per user a full gap past
+    * the corpus max, closing every real session. */
+  private def sessionSentinels(base: DataFrame, mx: Option[Long],
+      gapMs: Long): Seq[DataFrame] =
+    mx.toSeq.map(m => base.select(col("user_id")).distinct()
+      .select(col("user_id"), lit(m + gapMs + 1000L).as("mid")))
+
+  /** (mid, event_type) stream input of the live-count gate row. */
+  private def liveCountBase(spark: SparkSession, sfDir: String): DataFrame =
+    TestTables.eventsDocs(spark, sfDir).df
+      .select(col("mid").cast("long").as("mid"),
+        col("event_type").cast("string").as("event_type"))
+
+  /** The live-count gate's two far-future `__sentinel` slices — the
+    * first advances the watermark past every real window, the second
+    * triggers their emission — or none on an empty corpus. */
+  private[tables] def liveCountSentinels(base: DataFrame): Seq[DataFrame] =
+    corpusMaxMid(base).toSeq.flatMap(m => Seq(10 * DayMs, 20 * DayMs).map(offset =>
+      base.sparkSession.range(1).select(
+        lit(m + offset).as("mid"),
+        lit("__sentinel").as("event_type"))))
+
   /** No-op twin of a streaming gate row: the SAME corpus read, slice
     * layout, fixed-mtime file-source replay, sentinel batches,
     * foreachBatch parquet sink, per-batch checkpoint fsyncs and
@@ -315,24 +353,13 @@ object StreamingGate {
             .select(col("user_id").cast("long").as("user_id"),
               col("mid").cast("long").as("mid"))
           // mirrors the gate row's collected-max sentinel (one scan)
-          val mxRow = base.agg(max(col("mid")).as("__mx")).head()
-          val mxv: Long = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-          val sentinel = base.select(col("user_id")).distinct()
-            .select(col("user_id"), lit(mxv + gapMs + 1000L).as("mid"))
-          orderedFileStream(base, "mid", 3, dir, extraSlices = Seq(sentinel))
-        case "seq_stream_livecount" =>
-          val dayMs = 86400000L
-          val base = TestTables.eventsDocs(spark, sfDir).df
-            .select(col("mid").cast("long").as("mid"),
-              col("event_type").cast("string").as("event_type"))
-          // mirrors the gate row's collected-max sentinel (one scan)
-          val mxRow = base.agg(max(col("mid")).as("__mx")).head()
-          val mxv: Long = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-          def sentinel(offset: Long) = base.sparkSession.range(1).select(
-            lit(mxv + offset).as("mid"),
-            lit("__sentinel").as("event_type"))
           orderedFileStream(base, "mid", 3, dir,
-            extraSlices = Seq(sentinel(10 * dayMs), sentinel(20 * dayMs)))
+            extraSlices = sessionSentinels(base, corpusMaxMid(base), gapMs))
+        case "seq_stream_livecount" =>
+          val base = liveCountBase(spark, sfDir)
+          // mirrors the gate row's collected-max sentinels (one scan)
+          orderedFileStream(base, "mid", 3, dir,
+            extraSlices = liveCountSentinels(base))
         case "seq_stream_follow" =>
           val base = TestTables.eventsDocs(spark, sfDir).df
           val lines = base.select(
@@ -465,18 +492,15 @@ object StreamingGate {
       // collect the corpus max ONCE: the old plan re-derived it as an
       // agg subtree inside the sentinel write AND the final filter —
       // two extra corpus scans per call for the same literal value
-      val mxRow = base.agg(max(col("mid")).as("__mx")).head()
-      val mxv: Long = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-      val sentinel = base.select(col("user_id")).distinct()
-        .select(col("user_id"), lit(mxv + gapMs + 1000L).as("mid"))
+      val mx = corpusMaxMid(base)
       val dir = freshDir(spark, "sessionize", sfDir)
       val stream = orderedFileStream(base, "mid", 3, dir,
-        extraSlices = Seq(sentinel))
+        extraSlices = sessionSentinels(base, mx, gapMs))
       sinkToParquet(
         graft.streaming.StreamingSessionize.fromDocs(stream, "user_id", gapMs).toDF(),
         s"$dir/out", s"$dir/ckpt")
       spark.read.parquet(s"$dir/out")
-        .where(col("start_ms") <= mxv)
+        .where(col("start_ms") <= mx.getOrElse(Long.MinValue))
         .select(col("user").as("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"))
         .orderBy(col("user_id"), col("start_ms"))
@@ -490,24 +514,13 @@ object StreamingGate {
     */
   def eventsStreamLiveCounts(spark: SparkSession, sfDir: String): DataFrame =
     TestTables.synchronized {
-      val dayMs = 86400000L
-      val base = TestTables.eventsDocs(spark, sfDir).df
-        .select(col("mid").cast("long").as("mid"),
-          col("event_type").cast("string").as("event_type"))
-      // collect the corpus max ONCE (one scan) — each sentinel write
-      // used to re-execute the max-agg subtree, a corpus scan per
-      // sentinel for the same literal value
-      val mxRow = base.agg(max(col("mid")).as("__mx")).head()
-      val mxv: Long = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-      def sentinel(offset: Long) = base.sparkSession.range(1).select(
-        lit(mxv + offset).as("mid"),
-        lit("__sentinel").as("event_type"))
+      val base = liveCountBase(spark, sfDir)
       val dir = freshDir(spark, "livecount", sfDir)
       val stream = orderedFileStream(base, "mid", 3, dir,
-        extraSlices = Seq(sentinel(10 * dayMs), sentinel(20 * dayMs)))
+        extraSlices = liveCountSentinels(base))
       sinkToParquet(
         graft.streaming.LiveAggregates.liveCountByField(
-          stream, "event_type", dayMs, lateness = "1 second"),
+          stream, "event_type", DayMs, lateness = "1 second"),
         s"$dir/out", s"$dir/ckpt")
       spark.read.parquet(s"$dir/out")
         .where(col("name") =!= "__sentinel")
