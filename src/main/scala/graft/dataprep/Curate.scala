@@ -4,9 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composition a training-data
-  * pipeline actually runs, expressed as ONE DataFrame program so
-  * Catalyst sees (and optimizes) the whole flow — no materialization
-  * barriers between stages unless a stage semantically needs one.
+  * pipeline actually runs.
   *
   * Stage order follows standard practice (cheap row-local gates first,
   * corpus-wide joins on the survivors only):
@@ -19,6 +17,21 @@ import org.apache.spark.sql.functions._
   *   7. train/val/test    — row-local hash-range split
   * Every stage is individually oracle-verified by its own gate query;
   * this operator is the composition, invariant-checked in CurateSpec.
+  *
+  * [[pipeline]] cuts its lineage with an eager `localCheckpoint` at
+  * three points: the gated corpus (read twice by stage 3), the
+  * exact-dedup survivors (read by LSH banding, the clusters path and
+  * the near-dup join) and the near-dedup survivors (read three times
+  * by stage 5 and once by the split). A cut saves the recompute a
+  * cache pin would, and also shortens the plan: every later analysis,
+  * cache lookup, AQE re-plan and SQL-execution explain starts at a
+  * `LogicalRDD` leaf instead of walking back to the scan (a pin keeps
+  * the whole upstream plan inside its `InMemoryRelation`). That
+  * driver-side cost scales with plan size times the number of
+  * executions, and the near-dup and decontamination stages run many
+  * small executions, so on a small corpus it, not the data, sets the
+  * pass time. Checkpoint blocks belong to their RDD and are freed by
+  * the ContextCleaner once unreferenced: a pass leaves no cache entry.
   */
 object Curate {
 
@@ -41,7 +54,9 @@ object Curate {
       defaultRate: Double = 1.0)
 
   /** Run the pipeline. Returns the curated corpus: original columns
-    * plus `quality_score`, `pred_lang` and `split` provenance.
+    * plus `quality_score`, `pred_lang` and `split` provenance. Stages
+    * 1-4 run their jobs at call time; the returned frame is lazy over
+    * the near-dedup checkpoint.
     */
   def pipeline(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, benchPred: Column, cfg: Config = Config()): DataFrame = {
@@ -58,45 +73,30 @@ object Curate {
         "text_len", "s_en", "s_de", "s_es", "s_fr", "s_zh")
       // stage 3 consumes the gated frame TWICE (dedup-key agg side +
       // join side) and the two exchanges never canonicalize equal, so
-      // unpersisted the quality+langid scoring pass runs twice over
-      // the corpus; pin it so the second consumption is a cache read
-      // (released right after the survivor set materializes)
-      .persist()
+      // uncut the quality+langid scoring pass would run twice
+      .localCheckpoint()
 
     // 3: exact dedup — keep the min-id representative per content hash
     val keepExact = gated
       .groupBy(md5(col(textCol)).as("__h"))
       .agg(min(col(idCol)).as(idCol))
       .select(idCol)
-    val exactDeduped = gated.join(keepExact, Seq(idCol))
+    val survivors = gated.join(keepExact, Seq(idCol)).localCheckpoint()
 
-    // 4: near-dup drop on the exact-deduped survivors. The pairs plan
-    // feeds the clusters fixpoint, which persists its own edge list —
-    // persist the survivor set once here so the fixpoint's repeated
-    // reads don't re-run stages 1-3 per round.
-    val survivors = exactDeduped.persist()
+    // 4: near-dup drop on the exact-deduped survivors. Pairs and
+    // clusters both run jobs at call time; the clusters labels stay
+    // pinned until the kept set is cut, then go. Stage 5 reads the kept
+    // set THREE times (bench shingles, corpus shingles, the outer
+    // anti-join base) and the split once more: each is a block read,
+    // not a survivors⋈labels join replay.
     val pairs = Dedup.minhashLshPairs(survivors, idCol, textCol,
       cfg.numHashes, cfg.bands, cfg.thresholdNum, cfg.thresholdDen)
       .select("id_a", "id_b")
-    // minhashLshPairs is eager (localCheckpoint inside), so survivors
-    // is materialized here and the gated pin has served its purpose
-    gated.unpersist()
-    // decontamination reads its input THREE times (bench shingles,
-    // corpus shingles, the outer anti-join base) and the final split
-    // once more — persist the near-deduped survivors so each traversal
-    // is a cache read, not a survivors⋈labels join replay. Eager
-    // materialization is consistent with this stage's shape: the
-    // clusters fixpoint already runs jobs at call time. With it
-    // materialized, both upstream caches (stage-3 survivors AND the
-    // fixpoint's converged label frame — which dropNearDuplicates
-    // would leave pinned) can go.
     val labels = Dedup.clusters(survivors, idCol, pairs)
     val nearDeduped = survivors.join(
       labels.where(col("id") === col("rep")).select(col("id").as(idCol)),
-      Seq(idCol)).persist()
-    nearDeduped.count()
+      Seq(idCol)).localCheckpoint()
     labels.unpersist()
-    survivors.unpersist()
 
     // 5: decontamination vs the benchmark subset
     val cleaned = Decontaminate.clean(nearDeduped, idCol, textCol,
@@ -210,20 +210,19 @@ object Curate {
     out
   }
 
-  /** Per-stage audit counts (docs surviving each gate) — the report a
-    * pipeline run logs for dataset cards. One job per stage boundary.
+  /** Per-stage audit counts (docs in, docs kept, docs per split) —
+    * the report a pipeline run logs for dataset cards. One job counts
+    * the input and one the output per split; `kept` sums the splits.
     */
   def report(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, benchPred: Column, cfg: Config = Config()): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val out = pipeline(df, idCol, textCol, sourceCol, benchPred, cfg).persist()
     val total = df.count()
-    val kept = out.count()
-    val bySplit = out.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    out.unpersist()
-    (Seq("input" -> total, "kept" -> kept) ++ bySplit.toSeq.sortBy(_._1))
+    val bySplit = pipeline(df, idCol, textCol, sourceCol, benchPred, cfg)
+      .groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    (Seq("input" -> total, "kept" -> bySplit.map(_._2).sum) ++ bySplit)
       .toDF("stage", "docs")
   }
 }

@@ -735,28 +735,35 @@ object Dedup {
     * The returned frame is persisted (it IS the converged state;
     * recomputing it would replay every round) — callers should
     * unpersist it when done.
+    *
+    * Path choice: one collect of at most `driverEdgeCap + 1` directed
+    * edges. When they all fit the cap, union-find runs on the driver;
+    * otherwise the distributed fixpoint runs over the persisted edge
+    * list, which evaluates `pairs` once more — pass a materialized
+    * pairs frame ([[minhashLshPairs]] returns one) when that is costly.
     */
   def clusters(ids: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 20, driverEdgeCap: Long = 4L << 20): DataFrame = {
     // both directions from ONE scan of the pairs pipeline: a
     // union(pairs, pairs.swapped) would evaluate the (potentially
     // expensive — e.g. full MinHash+LSH) pairs plan once per branch
-    // when the persist below first materializes
     val edges = pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
     // Near-dup pair graphs are SPARSE relative to their corpora (the
     // whole point of banding): when the edge list fits the driver,
     // union-find there collapses the multi-round distributed fixpoint
     // (one shuffle join + persist + count per round, pure fixed
     // overhead on a KB graph) into one collect + one broadcast join —
-    // same min-rep result, exactly. Above the cap (4M edges ≈ 64 MB)
-    // the distributed propagation below remains the scale path.
-    val edgeCount = edges.count()
-    if (edgeCount <= driverEdgeCap) {
+    // same min-rep result, exactly. The bounded collect both decides
+    // and feeds that path: more than `driverEdgeCap` rows back means
+    // the graph is over the cap (4M edges ≈ 64 MB), and the distributed
+    // propagation below remains the scale path.
+    val probe = edges // cap + 1 rows, clamped to the range limit takes
+      .limit((driverEdgeCap max -1L min (Int.MaxValue - 1L)).toInt + 1).collect()
+    if (probe.length <= driverEdgeCap) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -765,14 +772,13 @@ object Dedup {
         while (parent.getOrDefault(c, c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
         r
       }
-      edges.select(col("src"), col("dst")).collect().foreach { row =>
+      probe.foreach { row =>
         val (a, b) = (row.getLong(0), row.getLong(1))
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
       }
       val comp = parent.keySet().toArray(Array.empty[java.lang.Long])
         .map(id => (id.longValue(), find(id)))
-      edges.unpersist()
       val spark = ids.sparkSession
       import spark.implicits._
       val compDf = comp.toSeq.toDF("id", "__rep")
@@ -782,6 +788,7 @@ object Dedup {
         .persist() // same contract as the fixpoint path: caller unpersists
       return labels
     }
+    edges.persist() // every round reads it
     // round 0 fused into initialization: rep = min(id, min direct
     // neighbor) is exactly one propagation step from the identity
     // labeling at half a round's cost (one join instead of two) — for
@@ -835,7 +842,8 @@ object Dedup {
     * would make every downstream action replay the whole fixpoint
     * lineage). Long-lived sessions that materialize the result should
     * call [[clusters]] directly and unpersist the labels afterwards,
-    * as [[Curate.pipeline]] does.
+    * as [[Curate.pipeline]] does: it checkpoints the kept set, then
+    * unpersists the labels.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
     df.join(clusters(df, idCol, pairs).where(col("id") === col("rep"))

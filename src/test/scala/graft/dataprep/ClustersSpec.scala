@@ -31,12 +31,22 @@ class ClustersSpec extends SparkSpec {
       (10L, 11L),
       (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L),
     ).toDF("id_a", "id_b")
-    val driver = Dedup.clusters(ids, "doc_id", pairs)
-    val dist = Dedup.clusters(ids, "doc_id", pairs, driverEdgeCap = 0L)
-    val d = driver.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val f = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(d == f)
-    driver.unpersist(); dist.unpersist()
+    // only the fixpoint's label frame carries its convergence observe()
+    def fixpoint(labels: org.apache.spark.sql.DataFrame): Boolean =
+      labels.queryExecution.logical.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.CollectMetrics])
+    val directed = 2L * 7
+    // default cap, a cap equal to the directed edge count (still the
+    // driver), one below it and 0 (both the fixpoint)
+    val runs = Seq((4L << 20) -> false, directed -> false, directed - 1 -> true, 0L -> true)
+      .map { case (cap, viaFixpoint) =>
+        val labels = Dedup.clusters(ids, "doc_id", pairs, driverEdgeCap = cap)
+        assert(fixpoint(labels) == viaFixpoint, s"path taken at cap $cap")
+        val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        labels.unpersist()
+        got
+      }
+    assert(runs.forall(_ == runs.head) && runs.head.size == 30)
   }
 
   test("dropNearDuplicates keeps exactly one doc per component") {

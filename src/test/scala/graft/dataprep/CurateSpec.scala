@@ -46,6 +46,22 @@ class CurateSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("pipeline leaves no cache entry behind and returns a plan without one") {
+    spark.catalog.clearCache()
+    val outs = Seq(docs, docs.where(col("doc_id") =!= 3L)).map { in =>
+      val out = Curate.pipeline(in, "doc_id", "text", "source",
+        benchPred = col("doc_id") === 6L, cfg)
+      assert(out.collect().nonEmpty)
+      out
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a pass pinned a frame it never released")
+    outs.foreach { out =>
+      assert(out.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.isEmpty, "the returned plan reads a cache entry")
+    }
+  }
+
   test("pipelineV2: gopher gate, span rewrite, residue dedup, decontamination compose") {
     // two >=50-word spans whose longest common run (21 chars) stays
     // under spanK=24, so they never cover each other
